@@ -1,7 +1,12 @@
 package graft.plumba
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, GenericInternalRow, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types._
 
 /** Whole-frame ordered fold/scan over a `DataFrame` — the Spark-native
@@ -78,79 +83,12 @@ object CollectOps {
         if (partials.isEmpty) k.init
         else partials.iterator.map(_._2).reduceLeft(m.combine)
       case None =>
-        // Parity path: partitions stream to the driver in sorted order,
-        // folded sequentially like the reference, via the plain
-        // `toLocalIterator` walk (measured faster than the round-14
-        // read-ahead variant — see foldPrefetched, which keeps the
-        // overlap path behind a flag for fetch-bound deployments).
+        // Parity path: partitions stream to the driver in sorted order
+        // through `toLocalIterator` (which pipelines partition fetches),
+        // folded sequentially like the reference.
+        import scala.jdk.CollectionConverters._
         val proj = prepared(df, valueCols, orderCols)
-        foldPrefetched(proj, k)
-    }
-  }
-
-  /** Sequential parity fold with a ONE-PARTITION READ-AHEAD: while the
-    * driver folds partition i, partition i+1 is already being
-    * computed/fetched by a background job. Memory bound: ≤ 2 partitions
-    * resident.
-    *
-    * Lifecycle discipline (round-14 advice): the prefetch runs on a
-    * DEDICATED single thread whose creation happens on the CALLING
-    * thread at first submit — so it inherits the caller's SparkContext
-    * local properties (job group, scheduler pool) via their
-    * inheritable thread-local, and a user's `cancelJobGroup` reaches
-    * the in-flight prefetch job too (the shared `ExecutionContext
-    * .global` workers are pre-created elsewhere and inherit nothing).
-    * If the fold throws or stops early, the `finally` awaits the
-    * in-flight future (bounded by one partition fetch — or by the
-    * group cancellation it now responds to) and shuts the thread down,
-    * so no orphan job outlives the call. */
-  private def foldPrefetched[A](df: DataFrame, k: Kernel.Fold[A]): A = {
-    // MEASURED VERDICT (round 15, sf0.1, min-of-3 warm, near-clean
-    // window): the one-partition read-ahead below runs fold_multi_in_out
-    // in 2.83 s where the plain serialized `toLocalIterator` walk takes
-    // 1.44 s — the `df.rdd` conversion + per-partition `runJob` Array
-    // collection costs more than the fetch/fold overlap buys on this
-    // workload (toLocalIterator already pipelines partition fetch
-    // internally). The plain walk is therefore the DEFAULT; the
-    // read-ahead stays behind -Dgraft.fold.prefetch=on for I/O-bound
-    // deployments where a partition fetch genuinely dominates the fold
-    // (remote object storage), where the overlap argument applies.
-    if (!sys.props.get("graft.fold.prefetch").contains("on")) {
-      import scala.collection.JavaConverters._
-      return Kernel.foldRows(k, df.toLocalIterator().asScala.map(rowValues))
-    }
-    val rdd = df.rdd
-    val sc = rdd.sparkContext
-    val n = rdd.getNumPartitions
-    if (n == 0) return Kernel.foldRows(k, Iterator.empty)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
-      val t = new Thread(r, "graft-fold-prefetch")
-      t.setDaemon(true)
-      t
-    }
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(exec)
-    @volatile var inflight: Future[Array[Row]] = null
-    try {
-      def fetch(i: Int): Future[Array[Row]] =
-        Future { sc.runJob(rdd, (it: Iterator[Row]) => it.toArray, Seq(i)).head }
-      inflight = fetch(0)
-      val parts = new Iterator[Array[Row]] {
-        private var i = 0
-        def hasNext: Boolean = i < n
-        def next(): Array[Row] = {
-          val cur = Await.result(inflight, Duration.Inf)
-          i += 1
-          inflight = if (i < n) fetch(i) else null
-          cur
-        }
-      }
-      Kernel.foldRows(k, parts.flatMap(a => a.iterator).map(rowValues))
-    } finally {
-      val last = inflight
-      if (last != null) scala.util.Try(Await.ready(last, Duration.Inf))
-      exec.shutdown()
+        Kernel.foldRows(k, proj.toLocalIterator().asScala.map(rowValues))
     }
   }
 
@@ -164,7 +102,9 @@ object CollectOps {
     * README.md:57–62). For per-group scans use [[GroupOps.groupScan]]
     * (parallel across groups); for partitioned associative scans
     * [[WindowOps]]. Null rows emit null and do not advance the
-    * accumulator. */
+    * accumulator. Either way the result declares its ascending
+    * `orderCols` ordering to the planner, so a trailing
+    * `orderBy(orderCols)` costs no Exchange and no Sort. */
   def collectScan[A](
       df: DataFrame,
       valueCols: Seq[String],
@@ -183,28 +123,9 @@ object CollectOps {
       k: Kernel.Scan[A],
       resultType: DataType,
       resultName: String): DataFrame = {
-    require(valueCols.nonEmpty, "at least one scanned column is required")
-    val selCols = (orderCols ++ valueCols).distinct
-    val sel = df.select(selCols.map(col): _*)
-    val ordIdx = orderCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
-    val outSchema = StructType(
-      orderCols.map(c => sel.schema(selCols.indexOf(c))) :+
-        StructField(resultName, resultType, nullable = true))
-    val enc = Encoders.row(outSchema)
-    sel
-      .repartition(1)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .mapPartitions { it =>
-        var acc = k.init
-        it.map { r =>
-          val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-          val out =
-            if (Kernel.anyNull(vs)) null
-            else { acc = k.step(acc, k.withArgs(vs)); k.emit(acc) }
-          Row.fromSeq(ordIdx.map(r.get) :+ out)
-        }
-      }(enc)
+    val scan = ScanRows(df, valueCols, orderCols, resultType, resultName)
+    val sorted = scan.sel.repartition(1).sortWithinPartitions(orderCols.map(col): _*)
+    scan.frame(sorted.queryExecution.toRdd.mapPartitions(it => scan.emit(k, k.init, it)))
   }
 
   /** Parallel whole-frame scan for kernels whose step state obeys a
@@ -220,15 +141,19 @@ object CollectOps {
     * every executor busy — the 100 TB path for associative global scans
     * that aren't plain window aggregates.
     *
-    * The sorted input is materialized ONCE via `localCheckpoint(eager)`
-    * so both passes see the identical range partitioning (pass 2's
-    * prefix seeds are only valid for pass 1's exact partition layout).
-    * Unlike `persist()` — which pins a CacheManager entry until an
-    * explicit unpersist and therefore leaked one cached plan per call
-    * in long-lived sessions — checkpoint blocks are reference-tracked
-    * and dropped by the ContextCleaner when the returned DataFrame is
-    * garbage-collected. At cluster scale, reliable checkpointing has
-    * the same contract. */
+    * Both passes must see the identical range partitioning (pass 2's
+    * prefix seeds are only valid for pass 1's exact partition layout),
+    * so the sorted rows are copied and marked for an RDD-level
+    * `localCheckpoint`. Pass 1's collect is the job that computes them
+    * and stores the blocks; pass 2 and any retried task of either pass
+    * read those blocks instead of re-running the sort. The blocks live
+    * in the executors' block managers until the returned frame is
+    * garbage-collected (the ContextCleaner drops them) and are lost
+    * with their executor (SCALE.md, fault stories).
+    *
+    * The result declares the sort's range partitioning and ascending
+    * `orderCols` ordering, so a trailing `orderBy(orderCols)` plans with
+    * no Exchange and no Sort. */
   def collectScanMergeable[A](
       df: DataFrame,
       valueCols: Seq[String],
@@ -237,43 +162,101 @@ object CollectOps {
       m: Kernel.Merge[A],
       resultType: DataType,
       resultName: String = "scan"): DataFrame = {
-    require(valueCols.nonEmpty, "at least one scanned column is required")
-    val selCols = (orderCols ++ valueCols).distinct
-    val sel = df.select(selCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-      .localCheckpoint(true)
-    val ordIdx = orderCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
+    val scan = ScanRows(df, valueCols, orderCols, resultType, resultName)
+    val sorted = scan.sel.orderBy(orderCols.map(col): _*).queryExecution.toRdd
+      .map(_.copy())
+      .localCheckpoint()
     // pass 1: per-partition segment folds (null rows don't advance state)
-    val partials = sel.rdd
-      .mapPartitionsWithIndex { (idx, it) =>
-        var acc = m.neutral
-        it.foreach { r =>
-          val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-          if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-        }
-        Iterator((idx, acc))
-      }
+    val partials = sorted
+      .mapPartitionsWithIndex((idx, it) => Iterator((idx, scan.fold(k, m.neutral, it))))
       .collect().sortBy(_._1).iterator.map(_._2).toList
     // prefix for partition i = init merged with partials 0..i-1
     val prefixes = partials.scanLeft(k.init)((l, r) => m.combine(l, r)).toIndexedSeq
-    val prefixesB = sel.sparkSession.sparkContext.broadcast(prefixes)
-    val outSchema = StructType(
-      orderCols.map(c => sel.schema(selCols.indexOf(c))) :+
-        StructField(resultName, resultType, nullable = true))
-    val enc = Encoders.row(outSchema)
-    // pass 2: seeded re-scan, same persisted partitioning
-    sel.mapPartitions { it =>
-      val idx = org.apache.spark.TaskContext.getPartitionId()
-      var acc = prefixesB.value(idx)
-      it.map { r =>
-        val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-        val out =
-          if (Kernel.anyNull(vs)) null
-          else { acc = k.step(acc, k.withArgs(vs)); k.emit(acc) }
-        Row.fromSeq(ordIdx.map(r.get) :+ out)
-      }
-    }(enc)
+    val prefixesB = df.sparkSession.sparkContext.broadcast(prefixes)
+    // pass 2: seeded re-scan of the checkpointed partitions
+    scan.frame(sorted.mapPartitionsWithIndex((idx, it) => scan.emit(k, prefixesB.value(idx), it)))
   }
 
+  /** A scan's sorted selection `(orderCols ++ valueCols).distinct` and how
+    * its rows are read and emitted: value columns are handed to the
+    * kernel as external (Row-typed) values, order columns pass through
+    * in their internal form, and each emitted state is converted to
+    * `resultType`. [[frame]] mounts the emitted rows as a DataFrame of
+    * (orderCols..., resultName) that declares its sort order. */
+  private final class ScanRows(
+      @transient val sel: DataFrame,
+      valIdx: Array[Int],
+      ordIdx: Array[Int],
+      resultType: DataType,
+      resultName: String)
+      extends Serializable {
+    @transient private val fields = sel.schema.fields
+    private val valGet = valIdx.map(i => InternalRow.getAccessor(fields(i).dataType))
+    private val toScala = valIdx.map(i => CatalystTypeConverters.createToScalaConverter(fields(i).dataType))
+    private val ordGet = ordIdx.map(i => InternalRow.getAccessor(fields(i).dataType))
+    private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(resultType)
+
+    private def values(r: InternalRow): IndexedSeq[Any] = {
+      val a = new Array[Any](valIdx.length)
+      var i = 0
+      while (i < a.length) { a(i) = toScala(i)(valGet(i)(r, valIdx(i))); i += 1 }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+    }
+
+    /** Segment fold of one partition from `from` (pass 1). */
+    def fold[A](k: Kernel.Scan[A], from: A, rows: Iterator[InternalRow]): A = {
+      var acc = from
+      rows.foreach { r =>
+        val vs = values(r)
+        if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
+      }
+      acc
+    }
+
+    /** Scan of one partition from `from`: (orderCols..., state) per row;
+      * a null row emits null and does not advance the state. */
+    def emit[A](k: Kernel.Scan[A], from: A, rows: Iterator[InternalRow]): Iterator[InternalRow] = {
+      var acc = from
+      rows.map { r =>
+        val vs = values(r)
+        val out =
+          if (Kernel.anyNull(vs)) null
+          else { acc = k.step(acc, k.withArgs(vs)); toCatalyst(k.emit(acc)) }
+        val o = new Array[Any](ordIdx.length + 1)
+        var i = 0
+        while (i < ordIdx.length) { o(i) = ordGet(i)(r, ordIdx(i)); i += 1 }
+        o(i) = out
+        new GenericInternalRow(o)
+      }
+    }
+
+    /** The emitted rows as a DataFrame ordered by `orderCols` ascending.
+      * A one-partition result declares `SinglePartition`, a multi-
+      * partition one the range partitioning it came from. */
+    def frame(rows: RDD[InternalRow]): DataFrame = {
+      val ordCols = ordIdx.toSeq.map(i => AttributeReference(fields(i).name, fields(i).dataType, fields(i).nullable)())
+      val ordering = ordCols.map(a => SortOrder(a, Ascending))
+      val n = rows.getNumPartitions
+      val partitioning =
+        if (n == 1) SinglePartition
+        else if (ordering.isEmpty) UnknownPartitioning(n)
+        else RangePartitioning(ordering, n)
+      val output = ordCols :+ AttributeReference(resultName, resultType, nullable = true)()
+      DatasetBridge.ofRows(sel.sparkSession, output, rows, partitioning, ordering)
+    }
+  }
+
+  private object ScanRows {
+    def apply(
+        df: DataFrame,
+        valueCols: Seq[String],
+        orderCols: Seq[String],
+        resultType: DataType,
+        resultName: String): ScanRows = {
+      require(valueCols.nonEmpty, "at least one scanned column is required")
+      val selCols = (orderCols ++ valueCols).distinct
+      new ScanRows(df.select(selCols.map(col): _*),
+        valueCols.map(selCols.indexOf).toArray, orderCols.map(selCols.indexOf).toArray, resultType, resultName)
+    }
+  }
 }

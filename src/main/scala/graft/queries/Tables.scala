@@ -1,8 +1,11 @@
 package graft.queries
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table loading + oracle-parity helpers shared by the query catalog. */
 object Tables {
@@ -17,7 +20,7 @@ object Tables {
     * which yields the same int64 from any timestamp precision. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     setTsConfs(spark)
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }
 
@@ -29,8 +32,73 @@ object Tables {
     * FileStreamSource's directory check (events.parquet is one file). */
   def streamEvents(spark: SparkSession, dir: String): DataFrame = {
     setTsConfs(spark)
-    val raw = spark.read.parquet(s"$dir/events.parquet").schema
+    val raw = readParquet(spark, s"$dir/events.parquet").schema
     normalizeTs(spark.readStream.schema(raw).parquet(s"$dir/events.parquet*"))
+  }
+
+  /** `spark.read.parquet(path)` without the schema-inference Spark job
+    * after the first read of the same content: the schema Spark infers
+    * on a miss is stored under [[SchemaKey]] and passed in on later
+    * reads. A path that does not resolve is read uncached, so Spark
+    * raises its own error. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = SchemaKey(spark, path)
+    key.flatMap(schemas.get) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(schemas.put(_, df.schema))
+        df
+    }
+  }
+
+  /** What a parquet read's inferred schema depends on: the resolved path,
+    * the length and modification time of every file under it, and the
+    * session's parquet read confs, which change the types inference
+    * returns (nanosAsLong, binaryAsString, ...). A rewritten file or a
+    * changed conf is a new key. */
+  private final case class SchemaKey(
+      path: String,
+      files: Seq[(String, Long, Long)],
+      confs: Seq[(String, String)])
+
+  private object SchemaKey {
+    def apply(spark: SparkSession, path: String): Option[SchemaKey] = {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      try {
+        val root = fs.getFileStatus(p)
+        val files =
+          if (!root.isDirectory) Seq(root)
+          else {
+            val it = fs.listFiles(root.getPath, true)
+            val b = Seq.newBuilder[FileStatus]
+            while (it.hasNext) b += it.next()
+            b.result()
+          }
+        val confs = spark.conf.getAll.toSeq.filter { case (key, _) =>
+          key.startsWith("spark.sql.parquet.") || key.startsWith("spark.sql.legacy.parquet.")
+        }
+        Some(SchemaKey(
+          fs.makeQualified(root.getPath).toString,
+          files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted,
+          confs.sorted))
+      } catch {
+        case _: FileNotFoundException => None
+      }
+    }
+  }
+
+  /** Inferred schemas by [[SchemaKey]], least recently used evicted
+    * beyond 64 entries. */
+  private object schemas {
+    private val cap = 64
+    private val lru = new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+        size > cap
+    }
+    def get(k: SchemaKey): Option[StructType] = lru.synchronized(Option(lru.get(k)))
+    def put(k: SchemaKey, s: StructType): Unit = lru.synchronized(lru.put(k, s))
   }
 
   /** Normalize a `ts` column to bigint epoch nanos, branching on the

@@ -812,4 +812,59 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(exchanges <= 1 && plan.contains("rangepartitioning"),
       s"extraction must be scan-side narrow compute:\n$plan")
   }
+
+  // The whole-frame scans declare their sort order: the catalog's
+  // trailing orderBy(orderCols) must plan over the scan's output with no
+  // Exchange and no Sort (the scan itself is a leaf, its rows an RDD).
+  Seq("scan_running_max", "scan_running_max_par", "scan_balance_limit").foreach { q =>
+    test(s"$q: no Exchange and no Sort above the scan's output") {
+      val df = graft.SparkEntry.queries(q)(spark, TestSpark.sfDir)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("Scan ExistingRDD"), s"expected the scan's RDD leaf:\n$plan")
+      assert(!plan.contains("Exchange") && "\\bSort\\b".r.findFirstIn(plan).isEmpty,
+        s"the ordered scan output must not be re-shuffled or re-sorted:\n$plan")
+    }
+  }
+
+  test("multi-partition mergeable scan declares its range partitioning; orderBy adds nothing") {
+    import graft.plumba.{CollectOps, Kernel}
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    try {
+      spark.conf.set(key, "false") // keep the sort's 4 range partitions
+      val df = spark.range(0, 5000, 1, 4).select((col("id") * 7919 % 5000).as("k"), col("id").as("v"))
+      val add = (a: Long, b: Long) => a + b
+      val out = CollectOps.collectScanMergeable(df, Seq("v"), Seq("k"),
+          Kernel.Scan.of1[Long, Long](0L)(add), Kernel.Merge(0L, add),
+          org.apache.spark.sql.types.LongType, "run")
+        .orderBy("k")
+      val plan = out.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && "\\bSort\\b".r.findFirstIn(plan).isEmpty,
+        s"expected the scan's leaf only:\n$plan")
+      val declared = out.queryExecution.optimizedPlan.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.outputPartitioning
+      }
+      assert(declared.exists(p => p.toString.startsWith("rangepartitioning(k#") && p.numPartitions == 4),
+        s"declared: $declared")
+      // the rows come back in k order with the running sum of v over k
+      val byK = (0L until 5000L).map(id => (id * 7919 % 5000) -> id).sortBy(_._1)
+      val expected = byK.map(_._1).zip(byK.map(_._2).scanLeft(0L)(_ + _).tail)
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq == expected)
+    } finally spark.conf.unset(key)
+  }
+
+  test("scan_running_max: build + noop write runs at most 4 Spark jobs") {
+    graft.queries.Tables(spark, TestSpark.sfDir, "orders") // the schema store holds orders
+    val jobs = graft.JobCount(spark) {
+      graft.SparkEntry.queries("scan_running_max")(spark, TestSpark.sfDir)
+        .write.format("noop").mode("overwrite").save()
+    }
+    // range-bounds sample, sort shuffle, pass-1 fold, pass-2 write
+    assert(jobs <= 4, s"scan_running_max ran $jobs jobs")
+  }
+
+  test("a repeated Tables load runs no Spark job (no schema inference)") {
+    graft.queries.Tables(spark, TestSpark.sfDir, "orders")
+    val jobs = graft.JobCount(spark) { graft.queries.Tables(spark, TestSpark.sfDir, "orders") }
+    assert(jobs == 0, s"a second orders load ran $jobs jobs")
+  }
 }

@@ -99,4 +99,47 @@ class TablesSpec extends AnyFunSuite {
           s"non-nullable fields: ${df.schema.fields.filterNot(_.nullable).map(_.name).mkString(",")}")
     }
   }
+
+  // -------------------------------------------------------------------
+  // Schema store: a repeated load passes in the schema inferred by the
+  // first one, keyed by the files' content and the parquet confs — so an
+  // overwritten table or a changed conf must be inferred afresh.
+  // -------------------------------------------------------------------
+
+  test("schema store: an overwritten table loads with its new schema") {
+    val dir = java.nio.file.Files.createTempDirectory("tables-store").toString
+    spark.range(3).select(col("id").cast("int").as("a"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables(spark, dir, "t").schema.fieldNames.toSeq == Seq("a"))
+    assert(Tables(spark, dir, "t").schema.fieldNames.toSeq == Seq("a"), "stored schema reused")
+    spark.range(2).select(col("id").cast("string").as("b"), lit(1.5).as("c"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = Tables(spark, dir, "t")
+    assert(again.schema.map(f => f.name -> f.dataType) == Seq("b" -> StringType, "c" -> DoubleType))
+    assert(again.collect().map(_.getString(0)).sorted.toSeq == Seq("0", "1"))
+  }
+
+  test("schema store: a changed parquet conf re-infers the schema") {
+    val dir = java.nio.file.Files.createTempDirectory("tables-conf").toString
+    spark.range(1).select(lit("x").cast("binary").as("bin"))
+      .write.mode("overwrite").parquet(s"$dir/b.parquet")
+    val key = "spark.sql.parquet.binaryAsString"
+    try {
+      spark.conf.set(key, "false")
+      Tables(spark, dir, "b")
+      assert(graft.JobCount(spark)(Tables(spark, dir, "b")) == 0, "same content and confs: stored")
+      spark.conf.set(key, "true")
+      assert(graft.JobCount(spark)(Tables(spark, dir, "b")) > 0, "a changed conf must re-infer")
+    } finally spark.conf.unset(key)
+  }
+
+  test("schema store: a repeated events load still normalizes ts to bigint nanos") {
+    val first = Tables(spark, TestSpark.sfDir, "events")
+    val second = Tables(spark, TestSpark.sfDir, "events")
+    assert(second.schema == first.schema && second.schema("ts").dataType == LongType)
+    val ts = (df: org.apache.spark.sql.DataFrame) =>
+      df.orderBy("event_id").select("ts").head(5).map(_.getLong(0)).toSeq
+    assert(ts(second) == ts(first))
+    assert(Tables.streamEvents(spark, TestSpark.sfDir).schema("ts").dataType == LongType)
+  }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, DateType, IntegerType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** Distributed LEFT AS-OF JOIN — for every left row, the payload of the
   * LATEST right row with the same keys and time <= left time (or
@@ -134,11 +134,10 @@ object AsofJoin {
 
   /** SKEW-RESISTANT as-of join — same semantics as [[asofLast]], with
     * the time domain range-salted so a hot key's timeline spreads over
-    * up to `buckets` tasks instead of one (the
-    * [[graft.plumba.GroupOps.groupScanMergeable]] pattern applied to
-    * the carried-payload state).
+    * up to `buckets` tasks instead of one (a seeded prefix scan over the
+    * carried-payload state).
     *
-    * Three stages, the same shape as the salted group scan:
+    * Three stages:
     *  1. per (keys, time-range bucket): fold the bucket's LAST right
     *    payload (in (time, flag, tie-break) order) — parallel over
     *    (key, bucket) pairs, so the hot key's buckets run concurrently;
@@ -188,7 +187,7 @@ object AsofJoin {
     // comparisons per row vs materializing a second copy. Boundaries
     // affect only load balance, never results (see rangeBucketCol).
     val base = p.unioned.localCheckpoint(true)
-    val bucketCol = graft.plumba.GroupOps.rangeBucketCol(base, timeCol, buckets)
+    val bucketCol = rangeBucketCol(base, timeCol, buckets)
     val withB = base.withColumn("__bucket", bucketCol)
     val bIdx = p.unionCols.length // __bucket appended after the union layout
 
@@ -290,5 +289,47 @@ object AsofJoin {
           }
         }
       }(Encoders.row(p.outSchema))
+  }
+
+  /** Range-bucket column for [[asofLastSalted]]: a monotone numeric view
+    * of the time column cut at sampled quantile boundaries.
+    *
+    * `buckets <= 0` (the default) derives the count from the cluster:
+    * `max(2, defaultParallelism)` — a skewed key can then spread over
+    * every core, with no magic constant to retune per deployment.
+    *
+    * Boundaries come from `approxQuantile` over a BOUNDED random sample
+    * (5%, fixed seed; full frame when the sample is empty) — the sketch's
+    * memory is epsilon-bounded regardless of input size, and boundary
+    * precision only affects load BALANCE: any monotone boundaries are
+    * correct because equal time values always compare into the same
+    * bucket and nulls route to bucket 0 (nulls-first, matching the
+    * unsalted path's ascending sort). */
+  private def rangeBucketCol(df: DataFrame, orderHead: String, buckets: Int): Column = {
+    import org.apache.spark.sql.functions.when
+    val ordD = df.schema(orderHead).dataType match {
+      case DateType | TimestampType | TimestampNTZType =>
+        col(orderHead).cast(TimestampType).cast("long").cast("double")
+      case _ => col(orderHead).cast("double")
+    }
+    val nBuckets =
+      if (buckets > 0) buckets
+      else math.max(2, df.sparkSession.sparkContext.defaultParallelism)
+    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
+    // one quantile job over the bounded sample; an empty sample (tiny or
+    // all-null frame) yields NO boundaries, and only then does the full
+    // frame pay the sketch pass — no separate isEmpty pre-action
+    val sampled = df.select(ordD.as("__ordd")).sample(withReplacement = false, 0.05, seed = 42)
+    val fromSample = sampled.stat.approxQuantile("__ordd", probs, 0.01)
+    val boundaries = (if (fromSample.nonEmpty) fromSample
+      else df.select(ordD.as("__ordd")).stat.approxQuantile("__ordd", probs, 0.01))
+      .distinct.sorted
+    // NULL times sort FIRST under the unsalted ascending sort, so route
+    // them to bucket 0 explicitly — `ordD < b` is null for null ordD and
+    // would otherwise fall through to the LAST bucket
+    when(ordD.isNull, 0).otherwise(
+      boundaries.zipWithIndex.foldRight(lit(boundaries.length): Column) {
+        case ((b, i), rest) => when(ordD < b, i).otherwise(rest)
+      })
   }
 }

@@ -1,12 +1,7 @@
 package graft.plumba
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, GenericInternalRow, SortOrder}
-import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.sql.types._
 
 /** Whole-frame ordered fold/scan over a `DataFrame` — the Spark-native
@@ -123,9 +118,10 @@ object CollectOps {
       k: Kernel.Scan[A],
       resultType: DataType,
       resultName: String): DataFrame = {
-    val scan = ScanRows(df, valueCols, orderCols, resultType, resultName)
-    val sorted = scan.sel.repartition(1).sortWithinPartitions(orderCols.map(col): _*)
-    scan.frame(sorted.queryExecution.toRdd.mapPartitions(it => scan.emit(k, k.init, it)))
+    val rows = KernelRows(df, Nil, valueCols, orderCols)
+    val sorted = rows.sel.repartition(1).sortWithinPartitions(orderCols.map(col): _*)
+    rows.scanFrame(sorted.queryExecution.toRdd.mapPartitions(rows.scan(k, None, resultType)),
+      resultType, resultName)
   }
 
   /** Parallel whole-frame scan for kernels whose step state obeys a
@@ -139,17 +135,11 @@ object CollectOps {
     *
     * Unlike the sequential [[collectScan]] (reference parity) this keeps
     * every executor busy — the 100 TB path for associative global scans
-    * that aren't plain window aggregates.
-    *
-    * Both passes must see the identical range partitioning (pass 2's
-    * prefix seeds are only valid for pass 1's exact partition layout),
-    * so the sorted rows are copied and marked for an RDD-level
-    * `localCheckpoint`. Pass 1's collect is the job that computes them
-    * and stores the blocks; pass 2 and any retried task of either pass
-    * read those blocks instead of re-running the sort. The blocks live
-    * in the executors' block managers until the returned frame is
-    * garbage-collected (the ContextCleaner drops them) and are lost
-    * with their executor (SCALE.md, fault stories).
+    * that aren't plain window aggregates. It is the zero-key case of the
+    * per-group [[GroupOps.groupScanMergeable]]: both run [[KernelRows]]'
+    * segmented two-pass scan, whose sorted rows are held in an RDD-level
+    * `localCheckpoint` that pass 1 fills and pass 2 (and any retried task)
+    * reads, so pass 2's seeds always match pass 1's partition layout.
     *
     * The result declares the sort's range partitioning and ascending
     * `orderCols` ordering, so a trailing `orderBy(orderCols)` plans with
@@ -161,102 +151,6 @@ object CollectOps {
       k: Kernel.Scan[A],
       m: Kernel.Merge[A],
       resultType: DataType,
-      resultName: String = "scan"): DataFrame = {
-    val scan = ScanRows(df, valueCols, orderCols, resultType, resultName)
-    val sorted = scan.sel.orderBy(orderCols.map(col): _*).queryExecution.toRdd
-      .map(_.copy())
-      .localCheckpoint()
-    // pass 1: per-partition segment folds (null rows don't advance state)
-    val partials = sorted
-      .mapPartitionsWithIndex((idx, it) => Iterator((idx, scan.fold(k, m.neutral, it))))
-      .collect().sortBy(_._1).iterator.map(_._2).toList
-    // prefix for partition i = init merged with partials 0..i-1
-    val prefixes = partials.scanLeft(k.init)((l, r) => m.combine(l, r)).toIndexedSeq
-    val prefixesB = df.sparkSession.sparkContext.broadcast(prefixes)
-    // pass 2: seeded re-scan of the checkpointed partitions
-    scan.frame(sorted.mapPartitionsWithIndex((idx, it) => scan.emit(k, prefixesB.value(idx), it)))
-  }
-
-  /** A scan's sorted selection `(orderCols ++ valueCols).distinct` and how
-    * its rows are read and emitted: value columns are handed to the
-    * kernel as external (Row-typed) values, order columns pass through
-    * in their internal form, and each emitted state is converted to
-    * `resultType`. [[frame]] mounts the emitted rows as a DataFrame of
-    * (orderCols..., resultName) that declares its sort order. */
-  private final class ScanRows(
-      @transient val sel: DataFrame,
-      valIdx: Array[Int],
-      ordIdx: Array[Int],
-      resultType: DataType,
-      resultName: String)
-      extends Serializable {
-    @transient private val fields = sel.schema.fields
-    private val valGet = valIdx.map(i => InternalRow.getAccessor(fields(i).dataType))
-    private val toScala = valIdx.map(i => CatalystTypeConverters.createToScalaConverter(fields(i).dataType))
-    private val ordGet = ordIdx.map(i => InternalRow.getAccessor(fields(i).dataType))
-    private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(resultType)
-
-    private def values(r: InternalRow): IndexedSeq[Any] = {
-      val a = new Array[Any](valIdx.length)
-      var i = 0
-      while (i < a.length) { a(i) = toScala(i)(valGet(i)(r, valIdx(i))); i += 1 }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
-    }
-
-    /** Segment fold of one partition from `from` (pass 1). */
-    def fold[A](k: Kernel.Scan[A], from: A, rows: Iterator[InternalRow]): A = {
-      var acc = from
-      rows.foreach { r =>
-        val vs = values(r)
-        if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-      }
-      acc
-    }
-
-    /** Scan of one partition from `from`: (orderCols..., state) per row;
-      * a null row emits null and does not advance the state. */
-    def emit[A](k: Kernel.Scan[A], from: A, rows: Iterator[InternalRow]): Iterator[InternalRow] = {
-      var acc = from
-      rows.map { r =>
-        val vs = values(r)
-        val out =
-          if (Kernel.anyNull(vs)) null
-          else { acc = k.step(acc, k.withArgs(vs)); toCatalyst(k.emit(acc)) }
-        val o = new Array[Any](ordIdx.length + 1)
-        var i = 0
-        while (i < ordIdx.length) { o(i) = ordGet(i)(r, ordIdx(i)); i += 1 }
-        o(i) = out
-        new GenericInternalRow(o)
-      }
-    }
-
-    /** The emitted rows as a DataFrame ordered by `orderCols` ascending.
-      * A one-partition result declares `SinglePartition`, a multi-
-      * partition one the range partitioning it came from. */
-    def frame(rows: RDD[InternalRow]): DataFrame = {
-      val ordCols = ordIdx.toSeq.map(i => AttributeReference(fields(i).name, fields(i).dataType, fields(i).nullable)())
-      val ordering = ordCols.map(a => SortOrder(a, Ascending))
-      val n = rows.getNumPartitions
-      val partitioning =
-        if (n == 1) SinglePartition
-        else if (ordering.isEmpty) UnknownPartitioning(n)
-        else RangePartitioning(ordering, n)
-      val output = ordCols :+ AttributeReference(resultName, resultType, nullable = true)()
-      DatasetBridge.ofRows(sel.sparkSession, output, rows, partitioning, ordering)
-    }
-  }
-
-  private object ScanRows {
-    def apply(
-        df: DataFrame,
-        valueCols: Seq[String],
-        orderCols: Seq[String],
-        resultType: DataType,
-        resultName: String): ScanRows = {
-      require(valueCols.nonEmpty, "at least one scanned column is required")
-      val selCols = (orderCols ++ valueCols).distinct
-      new ScanRows(df.select(selCols.map(col): _*),
-        valueCols.map(selCols.indexOf).toArray, orderCols.map(selCols.indexOf).toArray, resultType, resultName)
-    }
-  }
+      resultName: String = "scan"): DataFrame =
+    KernelRows(df, Nil, valueCols, orderCols).scanMergeable(k, m, resultType, resultName, buckets = 0)
 }

@@ -1,6 +1,6 @@
 package graft.plumba
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -10,61 +10,23 @@ import org.apache.spark.sql.types._
   *
   * This is the reference's own scaling story made distributed: parallelism
   * *across* groups (unbounded group count spread over executors),
-  * strictly sequential order *within* a group (SURVEY §7.4). Implemented
-  * with the secondary-sort pattern — `repartition(keys)` +
-  * `sortWithinPartitions(keys, order)` + a single streaming pass with
-  * group-change detection — so a group never has to fit in memory and no
-  * per-group shuffle or `collect_list` buffer is built. At 100 TB this is
-  * one hash shuffle on the group keys followed by pipelined, spill-aware
-  * sorting; for skewed groups with mergeable kernels use
-  * [[groupFoldMergeable]] (range-salted partials).
-  */
+  * strictly sequential order *within* a group (SURVEY §7.4).
+  *
+  *  - [[groupFold]] / [[groupScan]] use the secondary-sort pattern —
+  *    `repartition(keys)` + `sortWithinPartitions(keys, order)` + a single
+  *    streaming pass with group-change detection — so a group never has
+  *    to fit in memory and no per-group `collect_list` buffer is built.
+  *    A whole group runs in one task.
+  *  - For kernels with a lawful [[Kernel.Merge]], [[groupFoldMergeable]] /
+  *    [[groupScanMergeable]] run the segmented two-pass scan over one
+  *    range sort on `(keys, order)` ([[KernelRows]]): a hot group's rows
+  *    spread over several range partitions, and each partition re-scans
+  *    from the exact prefix state of the group it continues.
+  *
+  * Every path detects group changes with Spark's grouping equality on
+  * internal values (NaN equals NaN, null equals null), so its groups are
+  * the groups of `df.groupBy(keyCols)`. */
 object GroupOps {
-
-  /** Range-bucket column for the salted fold/scan paths: a monotone
-    * numeric view of the leading ordering column cut at sampled quantile
-    * boundaries. Shared by [[groupFoldMergeable]] / [[groupScanMergeable]].
-    *
-    * `buckets <= 0` (the default) derives the count from the cluster:
-    * `max(2, defaultParallelism)` — a skewed group can then spread over
-    * every core, with no magic constant to retune per deployment.
-    *
-    * Boundaries come from `approxQuantile` over a BOUNDED random sample
-    * (5%, fixed seed; full frame when the sample is empty) — the sketch's
-    * memory is epsilon-bounded regardless of input size, and boundary
-    * precision only affects load BALANCE: any monotone boundaries are
-    * correct because equal order values always compare into the same
-    * bucket and nulls route to bucket 0 (nulls-first, matching the
-    * sequential paths' ascending sort). */
-  private[graft] def rangeBucketCol(df: DataFrame, orderHead: String, buckets: Int): Column = {
-    import org.apache.spark.sql.functions.{lit, when}
-    val ordD = df.schema(orderHead).dataType match {
-      case DateType | TimestampType | TimestampNTZType =>
-        col(orderHead).cast(TimestampType).cast("long").cast("double")
-      case _ => col(orderHead).cast("double")
-    }
-    val nBuckets =
-      if (buckets > 0) buckets
-      else math.max(2, df.sparkSession.sparkContext.defaultParallelism)
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    // one quantile job over the bounded sample; an empty sample (tiny or
-    // all-null frame) yields NO boundaries, and only then does the full
-    // frame pay the sketch pass — no separate isEmpty pre-action
-    val sampled = df.select(ordD.as("__ordd")).sample(withReplacement = false, 0.05, seed = 42)
-    val fromSample = sampled.stat.approxQuantile("__ordd", probs, 0.01)
-    val boundaries = (if (fromSample.nonEmpty) fromSample
-      else df.select(ordD.as("__ordd")).stat.approxQuantile("__ordd", probs, 0.01))
-      .distinct.sorted
-    // NULL ordering values sort FIRST under Spark's ascending
-    // sortWithinPartitions (the sequential paths), so route them to
-    // bucket 0 explicitly — `ordD < b` is null for null ordD and would
-    // otherwise fall through to the LAST bucket, reordering the fold
-    // relative to groupFold for order-sensitive mergeable kernels.
-    when(ordD.isNull, 0).otherwise(
-      boundaries.zipWithIndex.foldRight(lit(boundaries.length): Column) {
-        case ((b, i), rest) => when(ordD < b, i).otherwise(rest)
-      })
-  }
 
   /** Per-group ordered fold → one row per group: (keyCols..., resultName).
     * Fold null policy: rows with nulls in value columns are dropped;
@@ -83,54 +45,33 @@ object GroupOps {
       resultName: String = "fold",
       emit: A => Any = (a: A) => a: Any): DataFrame = {
     require(keyCols.nonEmpty, "at least one group key is required")
-    require(valueCols.nonEmpty, "at least one folded column is required")
-    val selCols = (keyCols ++ orderCols ++ valueCols).distinct
-    val sel = df.select(selCols.map(col): _*)
-    val keyIdx = keyCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
+    val rows = KernelRows(df, keyCols, valueCols, orderCols)
     val outSchema = StructType(
-      keyCols.map(c => sel.schema(selCols.indexOf(c))) :+
-        StructField(resultName, resultType, nullable = true))
-    val enc = Encoders.row(outSchema)
+      keyCols.map(rows.sel.schema(_)) :+ StructField(resultName, resultType, nullable = true))
     val sortCols = if (k.merge.exists(_.commutative)) keyCols else keyCols ++ orderCols
-    sel
+    rows.sel
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
-      .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val key = keyIdx.map(buf.head.get)
-            var acc = k.init
-            while (buf.hasNext && keyIdx.map(buf.head.get) == key) {
-              val r = buf.next()
-              val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-              if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-            }
-            Row.fromSeq(key :+ emit(acc))
-          }
-        }
-      }(enc)
+      .mapPartitions(it => rows.foldGroups(k, emit)(it))(Encoders.row(outSchema))
   }
 
   /** Skew-resistant per-group fold for kernels with a lawful
-    * [[Kernel.Merge]]: the ordering domain is cut into `buckets`
-    * contiguous ranges (boundaries from one `approxQuantile` sample
-    * pass), each (group, range) folds a partial in parallel, and per
-    * group the partials merge in range order. A hot group's work spreads
-    * over up to `buckets` tasks instead of one — the salting strategy
-    * for ordered folds at scale, lawful only because the kernel declared
-    * mergeability (never applied silently to sequential kernels).
+    * [[Kernel.Merge]] → one row per group: (keyCols..., resultName), in
+    * ascending key order.
     *
-    * Correctness of the range salt: buckets are intervals of the leading
-    * ordering column, so within any group a bucket holds a contiguous
-    * run of that group's ordered rows, and rows with equal leading-order
-    * values (tie classes) land in one bucket together. Boundary
-    * *accuracy* only affects balance, never correctness. The leading
-    * ordering column must be numeric (quantile-sampleable). Partial
-    * accumulators travel as java-serialized bytes (small: one per
-    * (group, range)). */
+    * The segmented two-pass scan over one range sort on
+    * `(keyCols ++ orderCols)` into `buckets` partitions (0: the session's
+    * shuffle partitions; see [[KernelRows]]): pass 1 folds each
+    * partition's first and last group run from `neutral`, the driver
+    * chains the prefix of every group that crosses a partition boundary,
+    * and pass 2 re-folds each partition from its seed. A group's row is
+    * emitted by the partition where its run ends. A hot group's work
+    * spreads over every partition its rows span instead of one task —
+    * lawful only because the kernel declared mergeability (never applied
+    * silently to sequential kernels). Any orderable ordering column works,
+    * and null ordering values sort first, as in [[groupFold]]. The result
+    * declares its key order, so `orderBy(keyCols)` adds no Exchange or
+    * Sort. */
   def groupFoldMergeable[A](
       df: DataFrame,
       keyCols: Seq[String],
@@ -143,91 +84,25 @@ object GroupOps {
       emit: A => Any = (a: A) => a: Any): DataFrame = {
     val m = k.merge.getOrElse(throw new IllegalArgumentException(
       "groupFoldMergeable requires a kernel with a declared Merge law; use groupFold for sequential kernels"))
-    require(keyCols.nonEmpty && valueCols.nonEmpty && orderCols.nonEmpty)
-    val selCols = (keyCols ++ orderCols ++ valueCols).distinct
-    val keyIdx = keyCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
-    val bIdx = selCols.length // __bucket is appended after selCols
-    val partialSchema = StructType(
-      keyCols.map(c => df.schema(c)) ++
-        Seq(StructField("__bucket", IntegerType), StructField("__acc", BinaryType)))
-
-    // round 21: kryo accumulator codec (see AccCodec — java
-    // ObjectOutputStream per partial dominated the salted stages)
-    def ser(a: A): Array[Byte] = AccCodec.ser(a)
-    def deser(b: Array[Byte]): A = AccCodec.deser[A](b)
-
-    // Round-21: checkpoint the narrow projection, then derive bucket
-    // boundaries from the cached rows — rangeBucketCol's approxQuantile
-    // sample pass otherwise scans the source once more than needed
-    // (boundaries affect only balance, never results)
-    val selDf = df.select(selCols.map(col): _*).localCheckpoint(true)
-    val bucketCol = rangeBucketCol(selDf, orderCols.head, buckets)
-    val partials = selDf
-      .withColumn("__bucket", bucketCol)
-      .repartition((keyCols :+ "__bucket").map(col): _*)
-      .sortWithinPartitions((keyCols ++ Seq("__bucket") ++ orderCols).map(col): _*)
-      .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val groupKey = keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)
-            var acc = m.neutral
-            while (buf.hasNext && (keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)) == groupKey) {
-              val r = buf.next()
-              val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-              if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-            }
-            Row.fromSeq(groupKey :+ ser(acc))
-          }
-        }
-      }(Encoders.row(partialSchema))
-
-    val outSchema = StructType(
-      keyCols.map(c => df.schema(c)) :+ StructField(resultName, resultType, nullable = true))
-    partials
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols :+ "__bucket").map(col): _*)
-      .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          private val nKeys = keyCols.length
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val key = (0 until nKeys).map(buf.head.get)
-            var acc = m.neutral
-            while (buf.hasNext && (0 until nKeys).map(buf.head.get) == key) {
-              val r = buf.next()
-              acc = m.combine(acc, deser(r.getAs[Array[Byte]](nKeys + 1)))
-            }
-            Row.fromSeq(key :+ emit(m.combine(k.init, acc)))
-          }
-        }
-      }(Encoders.row(outSchema))
+    require(keyCols.nonEmpty, "at least one group key is required")
+    KernelRows(df, keyCols, valueCols, orderCols).foldMergeable(k, m, resultType, resultName, buckets, emit)
   }
 
   /** Skew-resistant per-group SCAN for kernels with a lawful
-    * [[Kernel.Merge]] — completes the operator matrix next to
-    * [[groupFoldMergeable]]: a hot group's scan spreads over up to
-    * `buckets` contiguous order-range tasks instead of one.
+    * [[Kernel.Merge]] → one row per input row: (keyCols...,
+    * orderCols not in keyCols..., resultName), in ascending
+    * `(keyCols ++ orderCols)` order.
     *
-    * Three stages, two shuffles:
-    *  1. per-(group, range-bucket) segment folds (parallel, from
-    *     `neutral`, null rows skip) — same as the fold path;
-    *  2. per group, prefix-combine the bucket partials in bucket order
-    *     → one SEED accumulator per (group, bucket), emitted as
-    *     sentinel rows (O(groups × buckets) total, no per-row
-    *     duplication);
-    *  3. union seeds with the data rows, shuffle once on
-    *     (group, bucket), secondary-sort with the seed flag ahead of
-    *     the ordering columns so each (group, bucket) run begins with
-    *     its seed, then a single streaming pass re-scans every bucket
-    *     from its seed.
-    *
-    * Null ordering values route to bucket 0 (nulls-first ascending,
-    * matching [[groupScan]]'s sort). Lawful for the same reason as the
-    * two-pass whole-frame scan: seeds are exact prefix states. */
+    * The segmented form of [[CollectOps.collectScanMergeable]]'s two-pass
+    * prefix scan, over one range sort on `(keyCols ++ orderCols)` into
+    * `buckets` partitions (0: the session's shuffle partitions; see
+    * [[KernelRows]]): pass 1 folds each partition's first and last group
+    * run from `neutral`, the driver chains each group's prefix across
+    * partition boundaries, and pass 2 re-scans every partition from its
+    * seed, restarting from `init` at each group change. Lawful because
+    * seeds are exact prefix states. Null ordering values sort first, as in
+    * [[groupScan]]. The result declares its range partitioning and order,
+    * so `orderBy(keyCols ++ orderCols)` adds no Exchange or Sort. */
   def groupScanMergeable[A](
       df: DataFrame,
       keyCols: Seq[String],
@@ -239,119 +114,8 @@ object GroupOps {
       buckets: Int = 0): DataFrame = {
     val m = k.merge.getOrElse(throw new IllegalArgumentException(
       "groupScanMergeable requires a kernel with a declared Merge law; use groupScan for sequential kernels"))
-    require(keyCols.nonEmpty && valueCols.nonEmpty && orderCols.nonEmpty)
-    import org.apache.spark.sql.functions.lit
-    val selCols = (keyCols ++ orderCols ++ valueCols).distinct
-    val keyIdx = keyCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
-    val bIdx = selCols.length // __bucket appended after selCols
-    val nKeys = keyCols.length
-
-    // round 21: kryo accumulator codec (see AccCodec — java
-    // ObjectOutputStream per partial dominated the salted stages)
-    def ser(a: A): Array[Byte] = AccCodec.ser(a)
-    def deser(b: Array[Byte]): A = AccCodec.deser[A](b)
-
-    // consumed twice (stage-1 partials + stage-3 data rows): materialize
-    // once via localCheckpoint — unlike persist(), whose CacheManager
-    // entry would outlive the call (one leaked cached plan per
-    // invocation in a long-lived session), checkpoint blocks are
-    // reference-tracked and dropped by the ContextCleaner when this
-    // DataFrame becomes unreachable. Round-21: checkpoint the NARROW
-    // projection first and derive the bucket boundaries from the cached
-    // rows — the approxQuantile sample pass otherwise re-scans the
-    // source before the checkpoint scans it again. The bucket
-    // when-chain re-evaluates per consumer (cheap) instead of being
-    // stored; boundaries affect only balance, never results.
-    val selDf = df.select(selCols.map(col): _*).localCheckpoint(true)
-    val bucketColC = rangeBucketCol(selDf, orderCols.head, buckets)
-    val withB = selDf.withColumn("__bucket", bucketColC)
-
-    // stage 1: segment partials per (group, bucket)
-    val partialSchema = StructType(
-      keyCols.map(c => df.schema(c)) ++
-        Seq(StructField("__bucket", IntegerType), StructField("__acc", BinaryType)))
-    val partials = withB
-      .repartition((keyCols :+ "__bucket").map(col): _*)
-      .sortWithinPartitions((keyCols ++ Seq("__bucket") ++ orderCols).map(col): _*)
-      .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val gk = keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)
-            var acc = m.neutral
-            while (buf.hasNext && (keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)) == gk) {
-              val r = buf.next()
-              val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-              if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-            }
-            Row.fromSeq(gk :+ ser(acc))
-          }
-        }
-      }(Encoders.row(partialSchema))
-
-    // stage 2: per group, prefix over bucket partials -> seed per bucket
-    val seeds = partials
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols :+ "__bucket").map(col): _*)
-      .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        val buf = it.buffered
-        while (buf.hasNext) {
-          val key = (0 until nKeys).map(buf.head.get)
-          var acc = k.init
-          while (buf.hasNext && (0 until nKeys).map(buf.head.get) == key) {
-            val r = buf.next()
-            out += Row.fromSeq(key :+ r.get(nKeys) :+ ser(acc)) // seed BEFORE this bucket
-            acc = m.combine(acc, deser(r.getAs[Array[Byte]](nKeys + 1)))
-          }
-        }
-        out.iterator
-      }(Encoders.row(partialSchema))
-
-    // stage 3: union sentinel seed rows ahead of data rows, one shuffle,
-    // one streaming re-scan pass
-    val dataRows = withB
-      .withColumn("__seed", lit(null).cast(BinaryType))
-      .withColumn("__flag", lit(1))
-    val seedRows = seeds
-      .select(
-        (keyCols.map(col) :+ col("__bucket")) ++
-          selCols.filterNot(keyCols.contains).map(c => lit(null).cast(df.schema(c).dataType).as(c)) :+
-          col("__acc").as("__seed") :+ lit(0).as("__flag"): _*)
-      .select((selCols.map(col) :+ col("__bucket") :+ col("__seed") :+ col("__flag")): _*)
-    val outOrdIdx = orderCols.filterNot(keyCols.contains).map(selCols.indexOf)
-    val outSchema = StructType(
-      keyCols.map(c => df.schema(c)) ++
-        orderCols.filterNot(keyCols.contains).map(c => df.schema(c)) :+
-        StructField(resultName, resultType, nullable = true))
-    val sIdx = selCols.length + 1 // __seed position
-    val fIdx = selCols.length + 2 // __flag position
-    dataRows.select((selCols.map(col) :+ col("__bucket") :+ col("__seed") :+ col("__flag")): _*)
-      .union(seedRows)
-      .repartition((keyCols :+ "__bucket").map(col): _*)
-      .sortWithinPartitions(
-        (keyCols.map(col) :+ col("__bucket") :+ col("__flag")) ++ orderCols.map(col): _*)
-      .mapPartitions { it =>
-        var curGroup: Seq[Any] = null
-        var acc = k.init
-        it.flatMap { r =>
-          val gk = keyIdx.map(r.get) :+ r.get(bIdx)
-          if (r.getInt(fIdx) == 0) { // seed sentinel opens its (group, bucket)
-            curGroup = gk
-            acc = deser(r.getAs[Array[Byte]](sIdx))
-            Iterator.empty
-          } else {
-            if (curGroup == null || gk != curGroup) { curGroup = gk; acc = k.init }
-            val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-            val out =
-              if (Kernel.anyNull(vs)) null
-              else { acc = k.step(acc, k.withArgs(vs)); k.emit(acc) }
-            Iterator.single(Row.fromSeq(keyIdx.map(r.get) ++ outOrdIdx.map(r.get) :+ out))
-          }
-        }
-      }(Encoders.row(outSchema))
+    require(keyCols.nonEmpty, "at least one group key is required")
+    KernelRows(df, keyCols, valueCols, orderCols).scanMergeable(k, m, resultType, resultName, buckets)
   }
 
   /** Per-group ordered scan → one row per input row:
@@ -366,32 +130,13 @@ object GroupOps {
       resultType: DataType,
       resultName: String = "scan"): DataFrame = {
     require(keyCols.nonEmpty, "at least one group key is required")
-    require(valueCols.nonEmpty, "at least one scanned column is required")
-    val selCols = (keyCols ++ orderCols ++ valueCols).distinct
-    val sel = df.select(selCols.map(col): _*)
-    val keyIdx = keyCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
-    val outOrdIdx = orderCols.filterNot(keyCols.contains).map(selCols.indexOf)
+    val rows = KernelRows(df, keyCols, valueCols, orderCols)
     val outSchema = StructType(
-      keyCols.map(c => sel.schema(selCols.indexOf(c))) ++
-        orderCols.filterNot(keyCols.contains).map(c => sel.schema(selCols.indexOf(c))) :+
+      (keyCols ++ orderCols.filterNot(keyCols.contains)).map(rows.sel.schema(_)) :+
         StructField(resultName, resultType, nullable = true))
-    val enc = Encoders.row(outSchema)
-    sel
+    rows.sel
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-      .mapPartitions { it =>
-        var curKey: Seq[Any] = null
-        var acc = k.init
-        it.map { r =>
-          val key = keyIdx.map(r.get)
-          if (curKey == null || key != curKey) { curKey = key; acc = k.init }
-          val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-          val out =
-            if (Kernel.anyNull(vs)) null
-            else { acc = k.step(acc, k.withArgs(vs)); k.emit(acc) }
-          Row.fromSeq(key ++ outOrdIdx.map(r.get) :+ out)
-        }
-      }(enc)
+      .mapPartitions(it => rows.scanGroups(k)(it))(Encoders.row(outSchema))
   }
 }

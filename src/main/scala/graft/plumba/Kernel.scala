@@ -50,6 +50,17 @@ object Kernel {
   final case class Merge[A](neutral: A, combine: (A, A) => A, commutative: Boolean = false)
       extends Serializable
 
+  /** What the row loops need of a fold or scan kernel: its initial
+    * state, its step over `extras ++ values`, and its merge law. */
+  sealed trait Steps[A] extends Serializable {
+    def init: A
+    def step: (A, IndexedSeq[Any]) => A
+    def extras: IndexedSeq[Any]
+    def merge: Option[Merge[A]]
+    def withArgs(values: IndexedSeq[Any]): IndexedSeq[Any] =
+      if (extras.isEmpty) values else extras ++ values
+  }
+
   /** Fold kernel: threads accumulator A over rows in order → scalar.
     * `step(acc, args)` receives `args = extras ++ rowValues`. */
   final case class Fold[A](
@@ -57,10 +68,7 @@ object Kernel {
       step: (A, IndexedSeq[Any]) => A,
       extras: IndexedSeq[Any] = Vector.empty,
       merge: Option[Merge[A]] = None)
-      extends Serializable {
-    def withArgs(values: IndexedSeq[Any]): IndexedSeq[Any] =
-      if (extras.isEmpty) values else extras ++ values
-  }
+      extends Steps[A]
 
   /** Scan kernel: threads accumulator A over rows in order, emitting the
     * accumulator (via `emit`, e.g. tuple → array) for every row.
@@ -75,10 +83,7 @@ object Kernel {
       extras: IndexedSeq[Any] = Vector.empty,
       emit: A => Any = (a: A) => a: Any,
       merge: Option[Merge[A]] = None)
-      extends Serializable {
-    def withArgs(values: IndexedSeq[Any]): IndexedSeq[Any] =
-      if (extras.isEmpty) values else extras ++ values
-  }
+      extends Steps[A]
 
   /** Typed-arity constructors (sugar over the generic untyped step; the
     * reference's nine arity-specialized kernels collapse to this —

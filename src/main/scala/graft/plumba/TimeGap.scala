@@ -16,7 +16,7 @@ import java.time.Duration
   * — `combine(fold(xs), fold(ys))` for an ordered split equals
   * `fold(xs ++ ys)` because the only cross-segment gap is
   * `ys.first − xs.last` — so the kernel is lawful on every mergeable
-  * path including the range-salted group fold. Not commutative:
+  * path including the segmented group fold. Not commutative:
   * partials must combine in order (GroupOps does). */
 object TimeGap {
 

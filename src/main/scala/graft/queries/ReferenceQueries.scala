@@ -71,12 +71,13 @@ object ReferenceQueries {
       .select("o_custkey", "o_orderkey", "hi")
   }
 
-  /** Per-customer running max through the RANGE-SALTED mergeable group
-    * scan ([[graft.plumba.GroupOps.groupScanMergeable]]): a hot
-    * customer's ordered scan spreads over order-date range buckets
-    * (segment folds → per-bucket seeds → parallel re-scan) instead of
-    * one task — the skew path for per-group scans at scale. Same
-    * oracle as the window form [[groupScanCummaxPerCust]]. */
+  /** Per-customer running max through the mergeable group scan
+    * ([[graft.plumba.GroupOps.groupScanMergeable]]): one range sort on
+    * (custkey, orderdate, orderkey) into 8 partitions spreads a hot
+    * customer's rows over several of them, and each partition re-scans
+    * from the prefix state of the customer it continues — the skew path
+    * for per-group scans at scale. Same oracle as the window form
+    * [[groupScanCummaxPerCust]]. */
   val groupScanCummaxSalted: Q = (s, dir) => {
     val o = Tables(s, dir, "orders")
     graft.plumba.GroupOps.groupScanMergeable(
@@ -343,10 +344,11 @@ object ReferenceQueries {
       .orderBy("user_id")
   }
 
-  /** Longest big-order streak per customer through the RANGE-SALTED
-    * mergeable group fold ([[graft.plumba.GroupOps.groupFoldMergeable]]):
-    * a skewed customer's ordered fold spreads over order-date range
-    * buckets. Oracle: per-customer islands SQL. */
+  /** Longest big-order streak per customer through the mergeable group
+    * fold ([[graft.plumba.GroupOps.groupFoldMergeable]]): one range sort
+    * on (custkey, orderdate, orderkey) spreads a skewed customer's
+    * ordered fold over several partitions, chained by prefix seeds.
+    * Oracle: per-customer islands SQL. */
   val groupFoldStreakPerCust: Q = (s, dir) => {
     val o = Tables(s, dir, "orders")
     graft.plumba.GroupOps.groupFoldMergeable(
@@ -357,7 +359,7 @@ object ReferenceQueries {
   }
 
   /** Per-customer MAX GAP between consecutive orders through the
-    * RANGE-SALTED mergeable group fold — the Datetime/Duration kernel
+    * mergeable group fold — the Datetime/Duration kernel
     * type surface (reference src/polars_numba/__init__.py:408–424;
     * date data in examples_fold.py:17) exercised END-TO-END, not just
     * unit-tested: the fold's value column is TimestampType (the kernel
@@ -422,7 +424,7 @@ object ReferenceQueries {
       |SELECT user_id, acc AS balance FROM r WHERE i = len(vals) + 1 ORDER BY user_id""".stripMargin
 
   val oracles: Map[String, String] = Map(
-    // the salted Duration fold is a max over consecutive-order gaps; the
+    // the mergeable Duration fold is a max over consecutive-order gaps; the
     // lag-window replay is exact in epoch seconds (dates at midnight)
     "order_gap_per_cust" ->
       """WITH g AS (SELECT o_custkey,

@@ -862,6 +862,31 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(jobs <= 4, s"scan_running_max ran $jobs jobs")
   }
 
+  test("group_scan_cummax_salted: build + noop write runs at most 4 Spark jobs, no Exchange or Sort above the scan") {
+    graft.queries.Tables(spark, TestSpark.sfDir, "orders")
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = graft.JobCount(spark) {
+      df = graft.SparkEntry.queries("group_scan_cummax_salted")(spark, TestSpark.sfDir)
+      df.write.format("noop").mode("overwrite").save()
+    }
+    // range-bounds sample, sort shuffle, pass-1 fold, pass-2 write
+    assert(jobs <= 4, s"group_scan_cummax_salted ran $jobs jobs")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Scan ExistingRDD"), s"expected the scan's RDD leaf:\n$plan")
+    assert(!plan.contains("Exchange") && "\\bSort\\b".r.findFirstIn(plan).isEmpty,
+      s"the ordered scan output must not be re-shuffled or re-sorted:\n$plan")
+  }
+
+  Seq("group_fold_streak_per_cust", "order_gap_per_cust").foreach { q =>
+    test(s"$q: build + noop write runs at most 4 Spark jobs") {
+      graft.queries.Tables(spark, TestSpark.sfDir, "orders")
+      val jobs = graft.JobCount(spark) {
+        graft.SparkEntry.queries(q)(spark, TestSpark.sfDir).write.format("noop").mode("overwrite").save()
+      }
+      assert(jobs <= 4, s"$q ran $jobs jobs")
+    }
+  }
+
   test("a repeated Tables load runs no Spark job (no schema inference)") {
     graft.queries.Tables(spark, TestSpark.sfDir, "orders")
     val jobs = graft.JobCount(spark) { graft.queries.Tables(spark, TestSpark.sfDir, "orders") }

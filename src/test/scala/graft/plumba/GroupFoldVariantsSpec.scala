@@ -1,7 +1,9 @@
 package graft.plumba
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -127,6 +129,135 @@ class GroupFoldVariantsSpec extends AnyFunSuite {
         Merge(0.0, (a: Double, b: Double) => math.max(a, b)), DoubleType)
       .write.format("noop").mode("overwrite").save()
     assert(cm.isEmpty, "a mergeable path registered a DataFrame cache it never released")
+  }
+
+  test("NaN and null group keys: every GroupOps path forms the groups of groupBy") {
+    import spark.implicits._
+    val df = Seq[(Option[Double], Long, Double)](
+      (Some(Double.NaN), 1L, 1.0), (Some(Double.NaN), 2L, 2.0), (Some(1.0), 3L, 8.0),
+      (Some(Double.NaN), 4L, 4.0), (None, 5L, 16.0), (None, 6L, 32.0)).toDF("g", "ord", "v")
+    val sumMerge = Some(Merge(0.0, (a: Double, b: Double) => a + b))
+    val sumF = Fold.of1[Double, Double](0.0, sumMerge)(_ + _)
+    val sumS = Kernel.Scan.of1[Double, Double](0.0, merge = sumMerge)(_ + _)
+    def keyed(d: DataFrame) = d.collect().map(r => String.valueOf(r.get(0)) -> r.getDouble(1)).toMap
+    // a running sum of positive values ends at the group's sum
+    def lastOfScan(d: DataFrame) = d.collect().groupBy(r => String.valueOf(r.get(0)))
+      .map { case (g, rs) => g -> rs.map(_.getDouble(2)).max }
+    val expected = keyed(df.groupBy("g").agg(sum("v")))
+    assert(expected == Map("NaN" -> 7.0, "1.0" -> 8.0, "null" -> 48.0))
+    assert(keyed(GroupOps.groupFold(df, Seq("g"), Seq("v"), Seq("ord"), sumF, DoubleType)) == expected)
+    assert(keyed(GroupOps.groupFoldMergeable(df, Seq("g"), Seq("v"), Seq("ord"), sumF, DoubleType, buckets = 2))
+      == expected)
+    val scans = Seq(
+      GroupOps.groupScan(df, Seq("g"), Seq("v"), Seq("ord"), sumS, DoubleType),
+      GroupOps.groupScanMergeable(df, Seq("g"), Seq("v"), Seq("ord"), sumS, DoubleType, buckets = 2))
+    scans.foreach(d => assert(lastOfScan(d) == expected))
+  }
+
+  // ---- segment boundaries: each mergeable path == its sequential path
+  // for the order-sensitive Streak and last-wins kernels -----------------
+
+  private val lastMerge = Merge(-1.0, (a: Double, b: Double) => if (b == -1.0) a else b)
+
+  /** Rows as strings, sorted: a multiset that prints NaN and null. */
+  private def lines(d: DataFrame): Seq[String] = d.collect().map(_.mkString("|")).toSeq.sorted
+
+  /** The mergeable fold and scan over `df` (value column `v`) with
+    * `buckets` range partitions equal their sequential forms. */
+  private def assertSegmentsAgree(df: DataFrame, keys: Seq[String], order: Seq[String], buckets: Int): Unit = {
+    val streakF = Streak.kernel[Double](_ > 50.0)
+    val streakS = Kernel.Scan[Streak.S](streakF.init, streakF.step,
+      emit = (s: Streak.S) => Streak.best(s), merge = streakF.merge)
+    val lastF = Fold.of1[Double, Double](-1.0, Some(lastMerge))((_, x) => x)
+    val lastS = Kernel.Scan.of1[Double, Double](-1.0, merge = Some(lastMerge))((_, x) => x)
+    val best = (s: Streak.S) => Streak.best(s)
+    assert(lines(GroupOps.groupFoldMergeable(df, keys, Seq("v"), order, streakF, LongType, buckets = buckets, emit = best))
+      == lines(GroupOps.groupFold(df, keys, Seq("v"), order, streakF, LongType, emit = best)))
+    assert(lines(GroupOps.groupFoldMergeable(df, keys, Seq("v"), order, lastF, DoubleType, buckets = buckets))
+      == lines(GroupOps.groupFold(df, keys, Seq("v"), order, lastF, DoubleType)))
+    assert(lines(GroupOps.groupScanMergeable(df, keys, Seq("v"), order, streakS, LongType, buckets = buckets))
+      == lines(GroupOps.groupScan(df, keys, Seq("v"), order, streakS, LongType)))
+    assert(lines(GroupOps.groupScanMergeable(df, keys, Seq("v"), order, lastS, DoubleType, buckets = buckets))
+      == lines(GroupOps.groupScan(df, keys, Seq("v"), order, lastS, DoubleType)))
+  }
+
+  /** Per range partition of the mergeable scan's output, the distinct
+    * values of `c` in row order. */
+  private def layout(df: DataFrame, keys: Seq[String], order: Seq[String], buckets: Int, c: String)
+      : Map[Int, Seq[String]] = {
+    val k = Kernel.Scan.of1[Double, Double](0.0, merge = Some(Merge(0.0, (a: Double, b: Double) => a + b)))(_ + _)
+    GroupOps.groupScanMergeable(df, keys, Seq("v"), order, k, DoubleType, buckets = buckets)
+      .select(spark_partition_id().as("pid"), col(c).cast("string")).collect()
+      .groupBy(_.getInt(0)).map { case (p, rs) => p -> rs.map(r => String.valueOf(r.get(1))).toSeq.distinct }
+  }
+
+  // 200 rows in one input partition: the range sample holds every row,
+  // so `buckets = 4` cuts the (g, ord) order into four 50-row ranges
+  private def values(id: Column) = when(id % 11 === 0, lit(null)).otherwise((id * 37 % 100).cast("double"))
+
+  test("segment boundaries: one hot key over all 4 partitions chains seeds across 3 boundaries") {
+    val df = spark.range(0, 200, 1, 1)
+      .select(lit(7L).as("g"), (col("id") * 79 % 200).as("ord"), values(col("id")).as("v"))
+    assert(layout(df, Seq("g"), Seq("ord"), 4, "g") == (0 until 4).map(_ -> Seq("7")).toMap)
+    assertSegmentsAgree(df, Seq("g"), Seq("ord"), 4)
+  }
+
+  test("segment boundaries: a key change exactly at each partition boundary") {
+    val df = spark.range(0, 200, 1, 1)
+      .select((col("id") % 4).as("g"), (col("id") * 79 % 200).as("ord"), values(col("id")).as("v"))
+    assert(layout(df, Seq("g"), Seq("ord"), 4, "g") == (0 until 4).map(p => p -> Seq(p.toString)).toMap)
+    assertSegmentsAgree(df, Seq("g"), Seq("ord"), 4)
+  }
+
+  test("segment boundaries: empty partitions between runs carry the prefix through") {
+    // range sorts never leave a gap between non-empty partitions, so the
+    // layout is built by hand: runs of g = 1, 2, 3 split by empty partitions
+    import spark.implicits._
+    val parts: Seq[Seq[(Long, Long, Double)]] = Seq(
+      (0L until 10L).map(o => (1L, o, (o * 37 % 100).toDouble)), Nil,
+      (10L until 15L).map(o => (1L, o, (o * 53 % 100).toDouble)) ++ (0L until 5L).map(o => (2L, o, 60.0 + o)),
+      Nil, Nil,
+      (5L until 10L).map(o => (2L, o, (o * 29 % 100).toDouble)) ++ (0L until 4L).map(o => (3L, o, 70.0)),
+      (4L until 7L).map(o => (3L, o, 10.0 * o)), Nil)
+    val df = parts.flatten.toDF("g", "ord", "v")
+    val sorted = spark.sparkContext.parallelize(parts, parts.length)
+      .flatMap(_.map { case (g, o, v) => InternalRow(g, o, v) })
+    val rows = KernelRows(df, Seq("g"), Seq("v"), Seq("ord"))
+    val streakF = Streak.kernel[Double](_ > 50.0)
+    val best = (s: Streak.S) => Streak.best(s)
+    assert(lines(rows.foldSorted(streakF, Streak.merge, sorted, LongType, "r", best))
+      == lines(GroupOps.groupFold(df, Seq("g"), Seq("v"), Seq("ord"), streakF, LongType, emit = best)))
+    val lastF = Fold.of1[Double, Double](-1.0, Some(lastMerge))((_, x) => x)
+    assert(lines(rows.foldSorted(lastF, lastMerge, sorted, DoubleType, "r", (a: Double) => a))
+      == lines(GroupOps.groupFold(df, Seq("g"), Seq("v"), Seq("ord"), lastF, DoubleType)))
+    val streakS = Kernel.Scan[Streak.S](streakF.init, streakF.step,
+      emit = (s: Streak.S) => Streak.best(s), merge = streakF.merge)
+    assert(lines(rows.scanSorted(streakS, Streak.merge, sorted, LongType, "r"))
+      == lines(GroupOps.groupScan(df, Seq("g"), Seq("v"), Seq("ord"), streakS, LongType)))
+    val lastS = Kernel.Scan.of1[Double, Double](-1.0, merge = Some(lastMerge))((_, x) => x)
+    assert(lines(rows.scanSorted(lastS, lastMerge, sorted, DoubleType, "r"))
+      == lines(GroupOps.groupScan(df, Seq("g"), Seq("v"), Seq("ord"), lastS, DoubleType)))
+  }
+
+  test("segment boundaries: null ordering values sort first inside a key that spans partitions") {
+    val df = spark.range(0, 200, 1, 1)
+      .select((col("id") % 2).as("g"),
+        when(col("id") % 9 === 0, lit(null)).otherwise(col("id") * 79 % 200).as("ord"),
+        values(col("id")).as("v"))
+    val byPart = layout(df, Seq("g"), Seq("ord"), 4, "g")
+    assert(byPart.values.count(_.contains("0")) > 1 && byPart.values.count(_.contains("1")) > 1,
+      s"each key should span partitions: $byPart")
+    assert(layout(df, Seq("g"), Seq("ord"), 4, "ord").values.count(_.contains("null")) == 2,
+      "both keys' null ordering values should open their runs")
+    assertSegmentsAgree(df, Seq("g"), Seq("ord"), 4)
+  }
+
+  test("segment boundaries: a StringType leading order column splits a hot key") {
+    val df = spark.range(0, 200, 1, 1)
+      .select(lit(3L).as("g"), format_string("k%04d", col("id") * 79 % 200).as("ord_s"),
+        col("id").as("ord"), values(col("id")).as("v"))
+    assert(layout(df, Seq("g"), Seq("ord_s", "ord"), 4, "g").size == 4)
+    assertSegmentsAgree(df, Seq("g"), Seq("ord_s", "ord"), 4)
   }
 
   test("commutative groupFold (keys-only sort) == ordered groupFold per group") {
